@@ -1,13 +1,15 @@
-"""Distributed Misra-Gries aggregation: the two-stage plan.
+"""Distributed Misra-Gries aggregation on the shared mergeable-sketch
+skeleton (mgspark/sketches/base.py).
 
-PySpark exposes no Python UDAF ``merge()`` hook, so the partial/final
-split of the reference's build+merge pipeline (pmg.py:26-98, 207-246) is
-staged explicitly (SURVEY.md §4.1):
+MG is a :class:`MGSketch`: its state is an :class:`MGState` plus an
+exemplar-token map, and its partial rows keep typed ``keys, counters,
+tokens, n, d`` columns (``PARTIAL_SCHEMA``).  The skeleton stages the
+reference's build+merge pipeline (pmg.py:26-98, 207-246) as
 
-    Scan parquet -> Project(tokenize/encode) -> mapInPandas(build)   [stage 1]
+    Scan parquet -> Project(tokenize/encode) -> mapInArrow(build)    [stage 1]
       -> [optional parquet checkpoint of partials]
-      -> groupBy(bucket).applyInPandas(merge) x ceil(log_fan P)      [stage 2]
-      -> collect tiny final sketch -> driver-side DP release
+      -> groupBy(bucket).applyInPandas(merge) while > 64 partials    [stage 2]
+      -> driver fold of the last <= 64 tiny rows -> driver-side DP release
 
 Stage 1 runs directly on the scan partitions — **zero shuffles**: MG build
 needs no key co-location, so each task folds its Arrow batches into one
@@ -25,18 +27,13 @@ partials (north_star requirement).
 
 from __future__ import annotations
 
-import time
-from typing import Iterator
-
 import numpy as np
 import pandas as pd
 
-from pyspark import TaskContext
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
-    DoubleType,
     LongType,
     StringType,
     StructField,
@@ -44,9 +41,17 @@ from pyspark.sql.types import (
 )
 
 from mgspark.kernel import MGState, mg_build_weighted, mg_merge
+from mgspark.sketches.base import (
+    MergeableSketch,
+    _group_merge,
+    sketch_agg,
+    sketch_partials,
+    sketch_tree_merge,
+)
 
 __all__ = [
     "PARTIAL_SCHEMA",
+    "MGSketch",
     "mg_partials",
     "mg_tree_merge",
     "mg_sketch",
@@ -59,56 +64,115 @@ __all__ = [
     "mg_topk",
 ]
 
-# One row per stage-1 task: the partial sketch plus lineage/metrics.
-# ``tokens`` (nullable) carries one exemplar token string per surviving
-# key so the release can decode keys without re-scanning the input.
-PARTIAL_SCHEMA = StructType(
-    [
-        StructField("partition_id", LongType(), False),
-        StructField("keys", ArrayType(LongType(), False), False),
-        StructField("counters", ArrayType(LongType(), False), False),
-        StructField("tokens", ArrayType(StringType(), True), True),
-        StructField("n", LongType(), False),
-        StructField("d", LongType(), False),
-        StructField("rows", LongType(), False),
-        StructField("wall_sec", DoubleType(), False),
-    ]
-)
-
 # Mask keeping hashed keys non-negative (the reference's key domain is
 # ints >= 0, pmg.py:32).
 _HASH_MASK = (1 << 62) - 1
 
 
-def _state_to_row(
-    state: MGState,
-    partition_id: int,
-    rows: int,
-    wall: float,
-    tokens: list[str] | None = None,
-) -> pd.DataFrame:
-    return pd.DataFrame(
-        {
-            "partition_id": [partition_id],
-            "keys": [state.keys.tolist()],
-            "counters": [state.counters.tolist()],
-            "tokens": [tokens],
-            "n": [state.n],
-            "d": [state.d],
-            "rows": [rows],
-            "wall_sec": [wall],
+class MGSketch(MergeableSketch):
+    """Misra-Gries as a mergeable sketch.
+
+    State is ``(MGState, exemplars)``: ``exemplars`` maps surviving keys
+    to one token string each, or is None when no token column rides
+    along.  Stage 1 reads a long ``key`` column plus the optional
+    ``weight_col`` and ``token_col``; merging needs only ``k``.
+    """
+
+    name = "mg"
+    # ``tokens`` (nullable) carries one exemplar token string per surviving
+    # key so the release can decode keys without re-scanning the input.
+    fields = [
+        StructField("keys", ArrayType(LongType(), False), False),
+        StructField("counters", ArrayType(LongType(), False), False),
+        StructField("tokens", ArrayType(StringType(), True), True),
+        StructField("n", LongType(), False),
+        StructField("d", LongType(), False),
+    ]
+
+    def __init__(self, k: int, weight_col: str | None = None, token_col: str | None = None):
+        self.k = k
+        self.weight_col = weight_col
+        self.token_col = token_col
+
+    def zero(self) -> tuple[MGState, dict[int, str] | None]:
+        return MGState(k=self.k), None
+
+    def merge(self, a, b):
+        """``mg_merge`` plus the exemplar fold: the earlier state's token
+        wins, and only keys that survive the merge keep one."""
+        (mg_a, ex_a), (mg_b, ex_b) = a, b
+        merged = mg_merge(mg_a, mg_b)
+        if ex_a is None and ex_b is None:
+            return merged, None
+        tokens = {**(ex_b or {}), **(ex_a or {})}
+        return merged, {key: tokens[key] for key in merged.keys.tolist() if key in tokens}
+
+    def to_row(self, state) -> dict:
+        mg, exemplars = state
+        keys = mg.keys.tolist()
+        return {
+            "keys": keys,
+            "counters": mg.counters.tolist(),
+            "tokens": None if exemplars is None else [exemplars.get(key) for key in keys],
+            "n": mg.n,
+            "d": mg.d,
         }
-    )
+
+    def from_row(self, row):
+        mg = MGState(
+            k=self.k,
+            keys=np.asarray(row["keys"], dtype=np.int64),
+            counters=np.asarray(row["counters"], dtype=np.int64),
+            n=int(row["n"]),
+            d=int(row["d"]),
+        )
+        tokens = row["tokens"]
+        # Missing array cells can surface as NaN through pandas.
+        if tokens is None or isinstance(tokens, float):
+            return mg, None
+        return mg, {
+            key: str(token) for key, token in zip(mg.keys.tolist(), tokens) if token is not None
+        }
+
+    def project(self, df: DataFrame, col: str) -> DataFrame:
+        cols = [F.col(col).cast("long").alias("key")]
+        if self.weight_col is not None:
+            cols.append(F.col(self.weight_col).cast("long").alias("weight"))
+        if self.token_col is not None:
+            cols.append(F.col(self.token_col).cast("string").alias("token"))
+        return df.select(*cols)
+
+    def fold_batch(self, state, batch):
+        keys = _to_int64(batch.column(0), -1)
+        if self.weight_col is not None:
+            weights = _to_int64(batch.column(1), 0)
+        else:
+            weights = np.ones(len(keys), dtype=np.int64)
+        tokens = batch.column(batch.num_columns - 1) if self.token_col is not None else None
+        return self.fold_keys(state, keys, weights, tokens)
+
+    def fold_keys(self, state, keys: np.ndarray, weights: np.ndarray, tokens=None):
+        """Fold ``(key, weight)`` pairs with ``mg_build_weighted``; with
+        ``tokens`` (aligned with ``keys``) also record one exemplar token
+        per surviving key."""
+        mg, exemplars = state
+        mg = mg_build_weighted(mg, keys, weights)
+        if tokens is not None:
+            exemplars = _update_exemplars(exemplars or {}, mg.keys, keys, tokens)
+        return mg, exemplars
 
 
-def _row_to_state(row, k: int) -> MGState:
-    return MGState(
-        k=k,
-        keys=np.asarray(row["keys"], dtype=np.int64),
-        counters=np.asarray(row["counters"], dtype=np.int64),
-        n=int(row["n"]),
-        d=int(row["d"]),
-    )
+# One row per stage-1 task: the partial sketch plus lineage/metrics.
+PARTIAL_SCHEMA = MGSketch.partial_schema()
+
+
+def _to_int64(column, fill: int) -> np.ndarray:
+    """Arrow column -> int64 numpy, nulls replaced by ``fill``."""
+    if column.null_count:
+        import pyarrow.compute as pc
+
+        column = pc.fill_null(column, fill)
+    return column.to_numpy(zero_copy_only=False)
 
 
 def encode_tokens(df: DataFrame, col: str, key_col: str = "key") -> DataFrame:
@@ -338,10 +402,6 @@ def _update_exemplars(
     return exemplars
 
 
-def _aligned_tokens(exemplars: dict[int, str], state_keys: np.ndarray) -> list[str | None]:
-    return [exemplars.get(int(key)) for key in state_keys]
-
-
 def mg_partials(
     df: DataFrame,
     key_col: str,
@@ -363,183 +423,14 @@ def mg_partials(
     boundary, so prefer this on pre-aggregated (distinct-key) inputs —
     the combiner path — where the extra bytes are O(distinct), not O(rows).
     """
-    import pyarrow as pa
-
-    cols = [F.col(key_col).cast("long").alias("key")]
-    if weight_col is not None:
-        cols.append(F.col(weight_col).cast("long").alias("weight"))
-    if token_col is not None:
-        cols.append(F.col(token_col).cast("string").alias("token"))
-    projected = df.select(*cols)
-    token_idx = 2 if weight_col is not None else 1
-
-    def _to_int64(column, fill: int) -> np.ndarray:
-        if column.null_count:
-            import pyarrow.compute as pc
-
-            column = pc.fill_null(column, fill)
-        return column.to_numpy(zero_copy_only=False)
-
-    def build(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        start = time.perf_counter()
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else -1
-        state = MGState(k=k)
-        exemplars: dict[int, str] = {}
-        rows = 0
-        for batch in batches:
-            rows += batch.num_rows
-            keys = _to_int64(batch.column(0), -1)
-            if weight_col is not None:
-                weights = _to_int64(batch.column(1), 0)
-            else:
-                weights = np.ones(len(keys), dtype=np.int64)
-            state = mg_build_weighted(state, keys, weights)
-            if token_col is not None:
-                exemplars = _update_exemplars(
-                    exemplars, state.keys, keys, batch.column(token_idx)
-                )
-        if rows == 0:
-            return
-        tokens = _aligned_tokens(exemplars, state.keys) if token_col is not None else None
-        yield pa.RecordBatch.from_pydict(
-            {
-                "partition_id": pa.array([pid], pa.int64()),
-                "keys": pa.array([state.keys.tolist()], pa.list_(pa.int64())),
-                "counters": pa.array([state.counters.tolist()], pa.list_(pa.int64())),
-                "tokens": pa.array([tokens], pa.list_(pa.string())),
-                "n": pa.array([state.n], pa.int64()),
-                "d": pa.array([state.d], pa.int64()),
-                "rows": pa.array([rows], pa.int64()),
-                "wall_sec": pa.array([time.perf_counter() - start], pa.float64()),
-            }
-        )
-
-    return projected.mapInArrow(build, PARTIAL_SCHEMA)
+    return sketch_partials(df, key_col, MGSketch(k, weight_col, token_col))
 
 
-def _merge_group_fn(k: int):
-    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        start = time.perf_counter()
-        # Pin fold order by partition id so reruns are deterministic
-        # (merge results can differ at (k+1)-th-largest ties otherwise).
-        bucket = int(pdf["_bucket"].iloc[0])
-        pdf = pdf.sort_values("partition_id")
-        state = MGState(k=k)
-        exemplars: dict[int, str] = {}
-        have_tokens = False
-        rows = 0
-        for row in pdf.itertuples(index=False):
-            fields = row._asdict()
-            state = mg_merge(state, _row_to_state(fields, k))
-            rows += int(row.rows)
-            tokens = fields.get("tokens")
-            # Missing array cells can surface as NaN through pandas.
-            if tokens is not None and not isinstance(tokens, float):
-                have_tokens = True
-                for key, token in zip(fields["keys"], tokens):
-                    if token is not None:
-                        exemplars.setdefault(int(key), str(token))
-        tokens_out = _aligned_tokens(exemplars, state.keys) if have_tokens else None
-        # The bucket id becomes the (dense) partition id of the next round.
-        return _state_to_row(state, bucket, rows, time.perf_counter() - start, tokens_out)
-
-    return merge_group
-
-
-def _merge_round(partials: DataFrame, k: int, fanout: int) -> DataFrame:
-    """One tree-merge round: bucket by ``partition_id // fanout``, merge
-    each bucket with one ``applyInPandas`` task."""
-    return (
-        partials.withColumn("_bucket", (F.col("partition_id") / fanout).cast("long"))
-        .groupBy("_bucket")
-        .applyInPandas(_merge_group_fn(k), PARTIAL_SCHEMA)
-    )
-
-
-def mg_tree_merge(
-    partials: DataFrame, k: int, fanout: int = 64, num_partials: int | None = None
-) -> DataFrame:
-    """Stage 2: balanced pairwise-style merge rounds, fully lazy.
-
-    Each round buckets partials by ``partition_id // fanout`` and merges a
-    bucket with one ``applyInPandas`` task; ceil(log_fan P) rounds leave a
-    single row.  Rounds are planned from ``num_partials`` (an upper bound
-    on stage-1 rows — one per input partition) so no counting job runs and
-    stage 1 executes exactly once.  Partial rows are <= k keys each, so
-    every round shuffles kilobytes regardless of input size.
-    """
-    if num_partials is None:
-        num_partials = partials.rdd.getNumPartitions()
-    merged = partials
-    remaining = max(int(num_partials), 1)
-    while True:
-        merged = _merge_round(merged, k, fanout)
-        if remaining <= fanout:
-            return merged
-        remaining = -(-remaining // fanout)
-
-
-def _driver_fold(rows, k: int) -> tuple[MGState, dict[int, str]]:
-    """Fold <= fanout partial rows into the final state on the driver —
-    the identical sequential merge (partition-id order, same
-    ``mg_merge``) the last ``applyInPandas`` round would run in one
-    task, minus that round's shuffle + Python-worker wave.  Bounded by
-    construction: the caller only hands over what a single merge task
-    would otherwise hold (fanout rows x O(k) counters)."""
-    state = MGState(k=k)
-    exemplars: dict[int, str] = {}
-    for row in sorted(rows, key=lambda r: r["partition_id"]):
-        fields = row.asDict()
-        state = mg_merge(state, _row_to_state(fields, k))
-        tokens = fields.get("tokens")
-        if tokens is not None:
-            for key, token in zip(fields["keys"], tokens):
-                if token is not None:
-                    exemplars.setdefault(int(key), str(token))
-    return state, exemplars
-
-
-def _mg_sketch_core(
-    df: DataFrame,
-    key_col: str,
-    k: int,
-    weight_col: str | None,
-    token_col: str | None,
-    checkpoint_dir: str | None,
-    fanout: int,
-) -> tuple[MGState, dict[int, str]]:
-    """Build + tree-merge; returns (final state, exemplar token map)."""
-    spark = df.sparkSession
-    if checkpoint_dir is not None:
-        import os
-
-        done_marker = os.path.join(checkpoint_dir, "_SUCCESS")
-        if not os.path.exists(done_marker):
-            mg_partials(df, key_col, k, weight_col, token_col).write.mode(
-                "overwrite"
-            ).parquet(checkpoint_dir)
-        partials = spark.read.parquet(checkpoint_dir)
-        # Round planning needs an upper bound on max(partition_id)+1, not
-        # the row count: empty stage-1 partitions emit no row, so
-        # checkpointed ids can be sparse and count() would under-plan the
-        # rounds, leaving multiple final rows.
-        max_pid = partials.agg(F.max("partition_id").alias("m")).first()["m"]
-        num_partials = (int(max_pid) + 1) if max_pid is not None else 0
-    else:
-        partials = mg_partials(df, key_col, k, weight_col, token_col)
-        num_partials = partials.rdd.getNumPartitions()
-    # Distributed rounds only while more than one merge task is needed;
-    # the last round (<= fanout tiny rows) folds on the driver with the
-    # same mg_merge in the same partition-id order — identical result,
-    # one less shuffle + Python-worker wave (that final applyInPandas
-    # round measured ~1 s of fixed latency per query at sf0.1).
-    merged = partials
-    remaining = max(int(num_partials), 1)
-    while remaining > fanout:
-        merged = _merge_round(merged, k, fanout)
-        remaining = -(-remaining // fanout)
-    return _driver_fold(merged.collect(), k)
+def mg_tree_merge(partials: DataFrame, k: int, num_partials: int | None = None) -> DataFrame:
+    """Stage 2 as a lazy DataFrame: merge ``PARTIAL_SCHEMA`` rows down to
+    one row (:func:`mgspark.sketches.base.sketch_tree_merge`), folding in
+    partition-id order.  ``num_partials`` bounds max(partition_id)+1."""
+    return sketch_tree_merge(partials, MGSketch(k), num_partials)
 
 
 _PROBE_ROWS = 200_000
@@ -579,7 +470,6 @@ def mg_sketch_with_tokens(
     token_col: str | None,
     weight_col: str | None = None,
     checkpoint_dir: str | None = None,
-    fanout: int = 64,
     pre_aggregate: bool | str = "auto",
 ) -> tuple[MGState, dict[int, str]]:
     """Distributed MG sketch plus exemplar-token decode in ONE input scan.
@@ -618,7 +508,8 @@ def mg_sketch_with_tokens(
         weight_col = "_w"
         if token_col is not None:
             token_col = "_tok"
-    return _mg_sketch_core(df, key_col, k, weight_col, token_col, checkpoint_dir, fanout)
+    state, exemplars = sketch_agg(df, key_col, MGSketch(k, weight_col, token_col), checkpoint_dir)
+    return state, exemplars or {}
 
 
 def mg_sketch(
@@ -627,7 +518,6 @@ def mg_sketch(
     k: int,
     weight_col: str | None = None,
     checkpoint_dir: str | None = None,
-    fanout: int = 64,
     pre_aggregate: bool | str = "auto",
 ) -> MGState:
     """End-to-end distributed MG sketch of ``df[key_col]``.
@@ -653,7 +543,7 @@ def mg_sketch(
     probe (:func:`_combiner_probe`) — the fast plan must never be opt-in.
     """
     state, _ = mg_sketch_with_tokens(
-        df, key_col, k, None, weight_col, checkpoint_dir, fanout, pre_aggregate
+        df, key_col, k, None, weight_col, checkpoint_dir, pre_aggregate
     )
     return state
 
@@ -690,98 +580,66 @@ def mg_sketch_grouped(
     k: int,
     salt_buckets: int | str = 8,
     token_col: str | None = None,
-    pre_aggregate: bool = True,
 ) -> DataFrame:
     """Per-entity MG sketches with explicit salting for skewed groups.
 
     ``groupBy(group)`` alone lets one giant group (e.g. a monorepo)
     straggle; instead group by ``(group, salt)`` where the salt spreads a
     group's keys over ``salt_buckets`` sub-sketches, then merge the
-    sub-sketches per group in a second, tiny aggregation.  Output: one row
-    per group with the merged sketch arrays.  With ``token_col``, one
-    exemplar token per surviving key rides along (``tokens`` array), so
-    callers decode without re-scanning the input.
+    sub-sketches per group in salt order in a second, tiny aggregation.
+    Output: one row per group with the merged sketch arrays.  With
+    ``token_col``, one exemplar token per surviving key rides along
+    (``tokens`` array), so callers decode without re-scanning the input.
     ``salt_buckets="auto"`` sizes the salt to observed group skew with a
     constant-cost prefix probe (:func:`_salt_probe`).
 
-    ``pre_aggregate=True`` (default) reduces to exact (group, key) counts
-    first: map-side combining collapses a hot key inside each scan
-    partition, so no single (group, key) can straggle one salt bucket —
-    a salt over raw rows cannot fix that, since a deterministic salt must
-    send equal rows to the same bucket.  Sub-group task size becomes
+    The input first reduces to exact (group, key) counts: map-side
+    combining collapses a hot key inside each scan partition, so no
+    single (group, key) can straggle one salt bucket — a salt over raw
+    rows cannot fix that, since a deterministic salt must send equal rows
+    to the same bucket.  Sub-group task size becomes
     O(distinct keys / salt_buckets), not O(rows).
     """
     if salt_buckets == "auto":
         salt_buckets = _salt_probe(df, group_col)
-    weight_col = None
-    if pre_aggregate:
-        aggs = [F.count("*").cast("long").alias("_w")]
-        if token_col is not None:
-            # min() = deterministic exemplar (all tokens under one hash
-            # key are equal anyway, modulo hash collisions).
-            aggs.append(F.min(token_col).alias("_tok"))
-        df = df.groupBy(group_col, key_col).agg(*aggs)
-        weight_col = "_w"
-        if token_col is not None:
-            token_col = "_tok"
+    aggs = [F.count("*").cast("long").alias("_w")]
+    if token_col is not None:
+        # min() = deterministic exemplar (all tokens under one hash
+        # key are equal anyway, modulo hash collisions).
+        aggs.append(F.min(token_col).alias("_tok"))
+    df = df.groupBy(group_col, key_col).agg(*aggs)
     # Salt deterministically from row content: a nondeterministic per-row
     # expression (e.g. monotonically_increasing_id) feeding a shuffle can
     # re-salt rows on task retry, duplicating/losing them.
     salted = df.withColumn(
         "_salt", F.pmod(F.xxhash64(F.col(key_col), F.lit("mg_salt")), F.lit(salt_buckets))
     )
+    sketch = MGSketch(k)
 
     def build_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        state = MGState(k=k)
         keys = pdf[key_col].to_numpy(dtype=np.int64, na_value=-1)
-        if weight_col is not None:
-            weights = pdf[weight_col].to_numpy(dtype=np.int64, na_value=0)
-        else:
-            weights = np.ones(len(keys), dtype=np.int64)
-        state = mg_build_weighted(state, keys, weights)
-        tokens = None
-        if token_col is not None:
-            firsts = (
-                pdf.dropna(subset=[key_col])
-                .drop_duplicates(subset=key_col)
-                .set_index(key_col)[token_col]
-            )
-            mapping = {int(key): str(tok) for key, tok in firsts.items() if tok is not None}
-            tokens = _aligned_tokens(mapping, state.keys)
-        out = _state_to_row(state, 0, int(weights.sum()), 0.0, tokens)
-        out.insert(0, "group", [pdf["_group"].iloc[0]])
-        return out
+        weights = pdf["_w"].to_numpy(dtype=np.int64, na_value=0)
+        tokens = pdf["_tok"].to_numpy(object) if token_col is not None else None
+        state = sketch.fold_keys(sketch.zero(), keys, weights, tokens)
+        # The salt is the partial's order key for the per-group merge.
+        row = {
+            "group": pdf["_group"].iloc[0],
+            "partition_id": int(pdf["_salt"].iloc[0]),
+            **sketch.to_row(state),
+            "rows": int(weights.sum()),
+            "wall_sec": 0.0,
+        }
+        return pd.DataFrame([row])
 
     grouped_schema = StructType(
         [StructField("group", df.schema[group_col].dataType, True)] + PARTIAL_SCHEMA.fields
     )
-
     partials = (
         salted.withColumn("_group", F.col(group_col))
         .groupBy("_group", "_salt")
         .applyInPandas(build_group, grouped_schema)
     )
-
-    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("partition_id")
-        state = MGState(k=k)
-        exemplars: dict[int, str] = {}
-        have_tokens = False
-        for row in pdf.itertuples(index=False):
-            fields = row._asdict()
-            state = mg_merge(state, _row_to_state(fields, k))
-            tokens = fields.get("tokens")
-            if tokens is not None and not isinstance(tokens, float):
-                have_tokens = True
-                for key, token in zip(fields["keys"], tokens):
-                    if token is not None:
-                        exemplars.setdefault(int(key), str(token))
-        tokens_out = _aligned_tokens(exemplars, state.keys) if have_tokens else None
-        out = _state_to_row(state, 0, int(pdf["rows"].sum()), 0.0, tokens_out)
-        out.insert(0, "group", [pdf["group"].iloc[0]])
-        return out
-
-    return partials.groupBy("group").applyInPandas(merge_group, grouped_schema)
+    return _group_merge(partials, "group", "partition_id", sketch)
 
 
 def mg_topk_grouped(
@@ -922,8 +780,8 @@ def mg_topk(
     if pre_aggregate:
         pre = df.groupBy(token_col).agg(F.count("*").cast("long").alias("_w"))
         encoded = encode_tokens(pre, token_col)
-        state, mapping = _mg_sketch_core(
-            encoded, "key", k, "_w", token_col, checkpoint_dir, 64
+        state, mapping = mg_sketch_with_tokens(
+            encoded, "key", k, token_col, "_w", checkpoint_dir, pre_aggregate=False
         )
         # A checkpoint written by the zero-shuffle path (or older code)
         # carries no exemplars; resolve any un-decoded keys with the

@@ -82,8 +82,7 @@ class HLLSketch(MergeableSketch):
 
 
 def hll_distinct_grouped(
-    df, group_col: str, value_col: str, p: int = 14, num_salts: int = 16,
-    mode: str = "auto",
+    df, group_col: str, value_col: str, p: int = 14, mode: str = "auto",
 ):
     """Per-group distinct-count estimates: (group, n_distinct_est long).
 
@@ -99,7 +98,7 @@ def hll_distinct_grouped(
     from mgspark.sketches.base import sketch_agg_grouped
 
     sk = HLLSketch(p)
-    payloads = sketch_agg_grouped(df, group_col, value_col, sk, num_salts, mode=mode)
+    payloads = sketch_agg_grouped(df, group_col, value_col, sk, mode=mode)
     schema = StructType(
         [
             StructField(group_col, df.schema[group_col].dataType, True),

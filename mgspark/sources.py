@@ -4,8 +4,9 @@
 * integer stream files — one element per line (README.md:17,
   pmg.py:515-517) — as a distributed Spark text source;
 * JSON sketch files — ``{"key": counter}`` objects (pmg.py:222-225,
-  532-534) — loaded into partial-sketch rows ready for
-  :func:`mgspark.aggregate.mg_tree_merge`, and written back out;
+  532-534) — loaded into ``PARTIAL_SCHEMA`` rows ready for
+  :func:`mgspark.aggregate.mg_tree_merge` (the shared merge rounds of
+  ``mgspark/sketches/base.py``), and written back out;
 * parquet checkpoint partials (the engine's own resumable format);
 * catalog tables — ``table:NAME`` (session catalog) and
   ``iceberg:catalog.db.table`` (Apache Iceberg DataSource-V2 reader with

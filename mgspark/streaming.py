@@ -35,7 +35,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from mgspark.kernel import MGState, mg_build_weighted
+from mgspark.aggregate import MGSketch
 
 __all__ = [
     "mg_streaming_sketch",
@@ -112,45 +112,18 @@ def mg_streaming_sketch(
         batches: Iterator[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
-        from mgspark.aggregate import _aligned_tokens, _update_exemplars
-
-        exemplars: dict[int, str] = {}
+        sketch = MGSketch(k)
         if state.exists:
-            keys, counters, tokens, n, d = state.get
-            mg = MGState(
-                k=k,
-                keys=np.asarray(keys, dtype=np.int64),
-                counters=np.asarray(counters, dtype=np.int64),
-                n=int(n),
-                d=int(d),
-            )
-            if tokens is not None:
-                exemplars = {
-                    int(key): str(tok)
-                    for key, tok in zip(keys, tokens)
-                    if tok is not None
-                }
+            acc = sketch.from_row(dict(zip(STREAM_STATE_SCHEMA.names, state.get)))
         else:
-            mg = MGState(k=k)
+            acc = sketch.zero()
         for pdf in batches:
             batch_keys = pdf["key"].to_numpy(dtype=np.int64, na_value=-1)
-            mg = mg_build_weighted(mg, batch_keys, np.ones(len(batch_keys), dtype=np.int64))
-            if token_col is not None:
-                exemplars = _update_exemplars(
-                    exemplars, mg.keys, batch_keys, pdf["token"].to_numpy(object)
-                )
-        tokens_out = _aligned_tokens(exemplars, mg.keys) if token_col is not None else None
-        state.update((mg.keys.tolist(), mg.counters.tolist(), tokens_out, mg.n, mg.d))
-        yield pd.DataFrame(
-            {
-                "shard": [int(shard_key[0])],
-                "keys": [mg.keys.tolist()],
-                "counters": [mg.counters.tolist()],
-                "tokens": [tokens_out],
-                "n": [mg.n],
-                "d": [mg.d],
-            }
-        )
+            tokens = pdf["token"].to_numpy(object) if token_col is not None else None
+            acc = sketch.fold_keys(acc, batch_keys, np.ones(len(batch_keys), dtype=np.int64), tokens)
+        row = sketch.to_row(acc)
+        state.update(tuple(row[name] for name in STREAM_STATE_SCHEMA.names))
+        yield pd.DataFrame([{"shard": int(shard_key[0]), **row}])
 
     return sharded.groupBy("shard").applyInPandasWithState(
         update,

@@ -7,6 +7,7 @@ import hashlib
 import os
 
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -16,10 +17,12 @@ from mgspark.aggregate import (
     mg_partials,
     mg_sketch,
     mg_sketch_grouped,
+    mg_sketch_with_tokens,
     mg_topk,
     mg_tree_merge,
 )
 from mgspark.kernel import MGState
+from mgspark.sketches import base as sketch_base
 from mgspark.testgen import repo_table_pandas, write_repo_table
 from mgspark.tokenize import content_tokens, ext_tokens, lang_tokens, sha256_invariant
 
@@ -69,7 +72,8 @@ def test_sketch_bound_content_tokens(spark, docs):
             assert key in survivors
 
 
-def test_partials_lineage_and_tree_merge(spark, repo_df):
+def test_partials_lineage_and_tree_merge(spark, repo_df, monkeypatch):
+    monkeypatch.setattr(sketch_base, "_FANOUT", 2)
     tokens = encode_tokens(content_tokens(repo_df), "token")
     partials = mg_partials(tokens, "key", 16).cache()
     rows = partials.collect()
@@ -78,7 +82,7 @@ def test_partials_lineage_and_tree_merge(spark, repo_df):
     assert all(len(r["keys"]) <= 16 for r in rows)
     total_rows = sum(r["rows"] for r in rows)
     assert total_rows == tokens.count()
-    final = mg_tree_merge(partials, 16, fanout=2).collect()
+    final = mg_tree_merge(partials, 16).collect()
     assert len(final) == 1
     assert final[0]["n"] == total_rows
     partials.unpersist()
@@ -95,12 +99,17 @@ def test_checkpoint_resume(spark, docs, tmp_path):
     assert (s1.n, s1.d) == (s2.n, s2.d)
 
 
-def test_checkpoint_resume_sparse_partition_ids(spark, tmp_path):
+def test_checkpoint_resume_sparse_partition_ids(spark, tmp_path, monkeypatch):
     """Checkpointed partial rows can have sparse partition ids (empty
     stage-1 partitions emit no row).  Round planning must bound rounds by
     max(partition_id)+1, not the row count, or the tree merge ends with
-    multiple rows and drops partials (ADVICE r01)."""
+    multiple rows and drops partials (ADVICE r01).  Covers MG's typed
+    partial rows and a payload family's (HLL)."""
     from mgspark.aggregate import PARTIAL_SCHEMA
+    from mgspark.sketches import HLLSketch
+    from mgspark.sketches.base import SKETCH_PARTIAL_SCHEMA, sketch_agg
+
+    monkeypatch.setattr(sketch_base, "_FANOUT", 2)
 
     ckpt = str(tmp_path / "sparse_ckpt")
     rows = [
@@ -109,10 +118,23 @@ def test_checkpoint_resume_sparse_partition_ids(spark, tmp_path):
     ]
     spark.createDataFrame(rows, PARTIAL_SCHEMA).write.mode("overwrite").parquet(ckpt)
     empty = spark.createDataFrame([], "key long")
-    state = mg_sketch(empty, "key", k=16, checkpoint_dir=ckpt, fanout=2)
+    state = mg_sketch(empty, "key", k=16, checkpoint_dir=ckpt)
     # All three partials must have merged into one state.
     assert state.n == 24
     assert sorted(state.keys.tolist()) == [1, 2, 51, 52, 131, 132]
+
+    sk = HLLSketch(p=10)
+    states = [sk.build(sk.zero(), pd.Series([pid * 10 + 1, pid * 10 + 2])) for pid in (0, 5, 13)]
+    hll_ckpt = str(tmp_path / "sparse_hll_ckpt")
+    spark.createDataFrame(
+        [(pid, sk.serialize(st), 2, 0.0) for pid, st in zip((0, 5, 13), states)],
+        SKETCH_PARTIAL_SCHEMA,
+    ).write.mode("overwrite").parquet(hll_ckpt)
+    expected = states[0]
+    for st in states[1:]:
+        expected = sk.merge(expected, st)
+    resumed = sketch_agg(spark.createDataFrame([], "_key long"), "_key", sk, checkpoint_dir=hll_ckpt)
+    assert np.array_equal(resumed, expected)
 
 
 def test_mg_topk_exemplars_survive_checkpoint(spark, docs, tmp_path, monkeypatch):
@@ -315,3 +337,116 @@ def test_mg_topk_combiner_resume_from_tokenless_checkpoint(spark, docs, tmp_path
     }
     assert resumed == first
     assert all(not t.isdigit() for t in resumed), "must not emit hash-key strings"
+
+
+def test_driver_fold_exemplars_only_surviving_keys(spark):
+    """The final fold evicts keys; the returned exemplar map must hold
+    only keys of the merged state (ADVICE low, aggregate.py:499)."""
+    rows = [("a",)] * 3 + [("b",)] + [("c",)] * 3 + [("d",)]
+    # Two input partitions: {a:3, b:1} and {c:3, d:1}; at k=2 the merge
+    # subtracts the third-largest counter and evicts b and d.
+    df = encode_tokens(spark.sparkContext.parallelize(rows, 2).toDF("token string"), "token")
+    state, exemplars = mg_sketch_with_tokens(df, "key", 2, token_col="token", pre_aggregate=False)
+    assert set(exemplars) <= set(map(int, state.keys))
+    assert sorted(exemplars.values()) == ["a", "c"]
+
+
+def test_grouped_merge_order_pinned_by_salt(spark, monkeypatch):
+    """MG merges depend on fold order (at k=2 the three partials below give
+    three different results across the six orders).  The grouped build
+    emits each partial's salt as its order key, and the shared per-group
+    merge returns the same row for every arrival order of one group's
+    partial rows."""
+    from itertools import permutations
+
+    from pyspark.sql.types import StringType, StructField, StructType
+
+    import mgspark.aggregate as agg
+    from mgspark.kernel import mg_merge
+    from mgspark.sketches.base import _group_merge
+
+    parts = [{1: 3, 2: 1}, {2: 2, 3: 2}, {1: 1, 4: 3}]
+    arrival_folds = set()
+    for perm in permutations(parts):
+        acc = MGState(k=2)
+        for part in perm:
+            acc = mg_merge(acc, MGState.from_dict(part, 2))
+        arrival_folds.add(tuple(acc.to_dict().items()))
+    assert len(arrival_folds) > 1, "fixture must be fold-order sensitive"
+
+    schema = StructType([StructField("group", StringType(), True)] + agg.PARTIAL_SCHEMA.fields)
+    rows = [
+        ("g", salt, sorted(part), [part[key] for key in sorted(part)], None, sum(part.values()), 0, 1, 0.0)
+        for salt, part in enumerate(parts)
+    ]
+    merged = set()
+    for perm in permutations(rows):
+        partials = spark.createDataFrame(list(perm), schema).coalesce(1)
+        (row,) = _group_merge(partials, "group", "partition_id", agg.MGSketch(2)).collect()
+        merged.add((tuple(row["keys"]), tuple(row["counters"]), row["n"], row["d"]))
+    salt_order = MGState(k=2)
+    for part in parts:
+        salt_order = mg_merge(salt_order, MGState.from_dict(part, 2, n=sum(part.values())))
+    assert merged == {
+        (tuple(salt_order.keys), tuple(salt_order.counters), salt_order.n, salt_order.d)
+    }
+
+    # The grouped build's partials carry distinct salts as order keys.
+    monkeypatch.setattr(agg, "_group_merge", lambda partials, *args: partials)
+    df = spark.createDataFrame([("x", i % 40) for i in range(400)], "g string, key long")
+    built = mg_sketch_grouped(df, "g", "key", 8, salt_buckets=4).collect()
+    assert sorted(r["partition_id"] for r in built) == [0, 1, 2, 3]
+
+
+def _state_arrays(state) -> list:
+    parts = state if isinstance(state, (tuple, list)) else [state]
+    return [(np.asarray(p).dtype.str, np.asarray(p).shape, np.asarray(p).tobytes()) for p in parts]
+
+
+def test_generic_sketches_multi_round_match_sequential_fold(spark, monkeypatch):
+    """Payload families through two distributed merge rounds plus the
+    driver fold (_FANOUT=2, six input partitions) equal a sequential
+    partition-id-order fold of their stage-1 rows, array for array.  The
+    input stays below t-digest compression and KLL capacity, where those
+    merges are exact, so the tree shape cannot change their result.
+    (t-digest and KLL serialize via np.savez, whose zip entries carry a
+    timestamp, so the state arrays are compared rather than the blobs.)"""
+    from mgspark.sketches import BloomFilter, CountMinSketch, HLLSketch, KLLSketch, TDigest
+    from mgspark.sketches.base import sketch_agg, sketch_partials
+
+    monkeypatch.setattr(sketch_base, "_FANOUT", 2)
+    df = spark.range(0, 150, 1, numPartitions=6).select(((F.col("id") * 7919) % 1000).alias("v"))
+    for sk in (HLLSketch(10), CountMinSketch(1e-2, 1e-2), BloomFilter(1000, 0.01), TDigest(), KLLSketch()):
+        rows = sketch_partials(df, "v", sk).collect()
+        assert len(rows) == 6
+        expected = sk.zero()
+        for row in sorted(rows, key=lambda r: r["partition_id"]):
+            expected = sk.merge(expected, sk.deserialize(bytes(row["payload"])))
+        got = sketch_agg(df, "v", sk)
+        assert _state_arrays(got) == _state_arrays(expected), sk.name
+
+
+def _jobs_run(spark, fn) -> int:
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobcount-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_sketch_agg_and_mg_sketch_run_one_job(spark):
+    """On an input of at most _FANOUT partitions the stage-1 rows fold on
+    the driver: one Spark job, no applyInPandas merge round."""
+    from mgspark.sketches import HLLSketch
+    from mgspark.sketches.base import sketch_agg
+
+    df = encode_tokens(spark.range(0, 2000, 1, numPartitions=4).select((F.col("id") % 37).alias("v")), "v")
+    assert df.rdd.getNumPartitions() <= sketch_base._FANOUT
+    assert _jobs_run(spark, lambda: sketch_agg(df, "key", HLLSketch(12))) == 1
+    assert _jobs_run(spark, lambda: mg_sketch(df, "key", 8, pre_aggregate=False)) == 1
