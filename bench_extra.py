@@ -1,8 +1,8 @@
 #!/usr/bin/env python3
-"""Per-query isolation harness (guide §1.4): times each declared query
-with the SAME session config and methodology as bench.py (collect() on a
-fresh plan, transient caches cleared), but additionally reports
+"""Per-query timer: times each declared query (collect() on a fresh
+plan, transient caches cleared before every repetition) and reports
 
+* the median and quartiles of the ``--repeats`` wall-time samples;
 * the number of Spark jobs the query launched (sequential job waves are
   the dominant cost at small SF — every .first()/.count()/toPandas() is
   a full scheduler round-trip);
@@ -11,17 +11,22 @@ fresh plan, transient caches cleared), but additionally reports
 
 Usage:
     python bench_extra.py q1 q2 ...      # time the named queries
-    python bench_extra.py --all          # every bench headline query
+    python bench_extra.py --all          # every query in __spark_entry__.queries()
+    python bench_extra.py --repeats 5 q1 # median and quartiles of 5 samples
     python bench_extra.py --plans q1 ... # also dump plans/r06/<q>_<tag>.txt
     python bench_extra.py --tag after --plans q1
 
-This file is NOT bench.py: the driver's frozen benchmark is untouched.
+One JSON line is printed per query as soon as it finishes, so an
+interrupted run keeps every finished row.  The benchmark of record is
+``perfbench/run.py``; this is the manual tool for a single query.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
+import statistics
 import sys
 import time
 
@@ -29,9 +34,10 @@ REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
-from bench import SPLIT_CONF, _build_merge_job, _repo_table_dir, REPO_ROWS
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
+# Small file splits, as in the runs that produced plans/r06/.
+SPLIT_CONF = {"spark.sql.files.maxPartitionBytes": str(8 * 1024 * 1024),
+              "spark.sql.files.openCostInBytes": str(512 * 1024)}
 
 
 def _jobs_in_group(spark, group: str) -> int:
@@ -44,74 +50,72 @@ def _plan_str(df) -> str:
     return df._jdf.queryExecution().explainString(mode)
 
 
-def main() -> None:
-    args = [a for a in sys.argv[1:]]
-    dump_plans = "--plans" in args
-    tag = "before"
-    if "--tag" in args:
-        tag = args[args.index("--tag") + 1]
-        args.remove("--tag")
-        args.remove(tag)
-    args = [a for a in args if a != "--plans"]
-    repeats = 1
-    if "--repeats" in args:
-        i = args.index("--repeats")
-        repeats = int(args[i + 1])
-        del args[i : i + 2]
+def _summary(samples: list[float]) -> dict:
+    q1, median, q3 = (
+        statistics.quantiles(samples, n=4, method="inclusive")
+        if len(samples) > 1 else samples * 3
+    )
+    return {"median_s": round(median, 4), "q1_s": round(q1, 4),
+            "q3_s": round(q3, 4), "n": len(samples)}
 
+
+def main(argv: list[str] | None = None) -> None:
+    ap = argparse.ArgumentParser(description="Time declared queries one by one.")
+    ap.add_argument("names", nargs="*", help="declared query names")
+    ap.add_argument("--all", action="store_true", help="time every declared query")
+    ap.add_argument("--repeats", type=int, default=1)
+    ap.add_argument("--plans", action="store_true", help="dump explain(formatted)")
+    ap.add_argument("--tag", default="before", help="plan file suffix")
+    args = ap.parse_args(argv)
+    if args.repeats < 1:
+        ap.error("--repeats must be at least 1")
+
+    from mgspark.aggregate import mg_sketch
+    from mgspark.cacheutil import clear_transient_caches
+    from mgspark.pipeline.similarity import clear_index_cache
     from mgspark.session import get_spark
 
-    spark = get_spark("mgspark-bench-extra", cores=CPUS, extra_conf=SPLIT_CONF)
     import __spark_entry__ as entrymod
-    from mgspark.cacheutil import clear_transient_caches
 
     qmap = entrymod.queries()
-    if "--all" in args:
-        from bench import HEADLINE_QUERIES
+    names = list(qmap) if args.all else args.names
+    unknown = [n for n in names if n not in qmap]
+    if unknown:
+        ap.error(f"not declared in __spark_entry__.queries(): {unknown}")
+    spark = get_spark("mgspark-bench-extra", cores=CPUS, extra_conf=SPLIT_CONF)
+    # Warm up: boot one Python worker per core through mgspark's stage-1 build.
+    keys = spark.range(0, 4096, numPartitions=CPUS).withColumnRenamed("id", "key")
+    mg_sketch(keys, "key", 16, pre_aggregate=False)
 
-        names = HEADLINE_QUERIES
-    else:
-        names = args
-    # Warm exactly like bench.py (python worker pool, codegen, parquet footers)
-    repo_dir = _repo_table_dir(REPO_ROWS)
-    _build_merge_job(spark, repo_dir)
-
-    results = {}
     plans_dir = os.path.join(REPO, "plans", "r06")
-    os.makedirs(plans_dir, exist_ok=True)
+    medians = []
     for name in names:
         samples = []
-        jobs = 0
-        for _ in range(repeats):
-            try:
-                from mgspark.pipeline.similarity import clear_index_cache
-
-                clear_index_cache()
-            except Exception:
-                pass
+        for i in range(args.repeats):
+            clear_index_cache()
             clear_transient_caches()
-            group = f"bench_extra:{name}:{len(samples)}"
+            group = f"bench_extra:{name}:{i}"
             spark.sparkContext.setJobGroup(group, name)
             t0 = time.perf_counter()
-            df = qmap[name](spark, SF_DIR)
-            df.collect()
-            samples.append(round(time.perf_counter() - t0, 4))
+            qmap[name](spark, SF_DIR).collect()
+            samples.append(time.perf_counter() - t0)
             jobs = _jobs_in_group(spark, group)
             spark.sparkContext.setJobGroup("", "")
-        results[name] = {"sec": min(samples), "samples": samples, "jobs": jobs}
-        if dump_plans:
+        row = {**_summary(samples), "jobs": jobs,
+               "samples": [round(s, 4) for s in samples]}
+        medians.append(row["median_s"])
+        if args.plans:
             clear_transient_caches()
+            os.makedirs(plans_dir, exist_ok=True)
             try:
                 plan = _plan_str(qmap[name](spark, SF_DIR))
-                with open(os.path.join(plans_dir, f"{name}_{tag}.txt"), "w") as f:
-                    f.write(plan)
             except Exception as e:  # queries that drive their own actions
-                with open(os.path.join(plans_dir, f"{name}_{tag}.txt"), "w") as f:
-                    f.write(f"(plan capture failed: {e})\n")
-        print(json.dumps({name: results[name]}), flush=True)
+                plan = f"(plan capture failed: {e})\n"
+            with open(os.path.join(plans_dir, f"{name}_{args.tag}.txt"), "w") as f:
+                f.write(plan)
+        print(json.dumps({name: row}), flush=True)
 
-    total = round(sum(r["sec"] for r in results.values()), 3)
-    print(json.dumps({"total": total, "n": len(results)}))
+    print(json.dumps({"total_median_s": round(sum(medians), 3), "queries": len(medians)}))
 
 
 if __name__ == "__main__":

@@ -150,7 +150,6 @@ def tdigest_quantiles_grouped(
     col: str,
     qs,
     compression: float = 200.0,
-    mode: str = "auto",
 ) -> DataFrame:
     """Per-group t-digest quantiles: (group, q double, quantile_est
     double) — ``groupBy(g).agg(percentile_approx)`` through the engine's
@@ -164,7 +163,7 @@ def tdigest_quantiles_grouped(
     from mgspark.sketches.base import sketch_agg_grouped
 
     sketch = TDigest(compression)
-    payloads = sketch_agg_grouped(df, group_col, col, sketch, mode=mode)
+    payloads = sketch_agg_grouped(df, group_col, col, sketch)
     qs = [float(q) for q in qs]
     schema = StructType(
         [

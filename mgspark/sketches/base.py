@@ -280,31 +280,29 @@ def sketch_agg_grouped(
     group_col: str,
     value_col: str,
     sketch: MergeableSketch,
-    mode: str = "auto",
 ) -> DataFrame:
     """Per-group sketches as a distributed DataFrame: one serialized
     state per group value — the ``df.groupBy(g).agg(sketch(x))`` shape
     PySpark cannot express as a Python UDAF.
 
-    Two plans, selected by ``mode``:
+    One JVM-only ``approx_count_distinct`` probe on the group column
+    picks one of two plans: map-side iff groups <= ``_MAPSIDE_GROUP_CAP``.
 
-    * ``"mapside"`` — stage 1 is a ZERO-input-shuffle ``mapInPandas``
+    * map-side — stage 1 is a ZERO-input-shuffle ``mapInPandas``
       over the scan partitions, each task folding a dict of per-group
       states (the map-side-combine shape of a hash aggregate); only
       O(partitions x groups x sketch-size) partial rows shuffle into
       the per-group merge.  Right whenever the distinct group count is
       modest (task memory holds groups x sketch-size).
-    * ``"shuffle"`` — stage 1 shuffles rows by ``(group, salt)`` where
+    * shuffle — stage 1 shuffles rows by ``(group, salt)`` where
       the salt derives from the INPUT PARTITION id, so both a hot group
       and a hot identical value fan across up to ``_NUM_SALTS`` cells.
       (Splitting identical rows across cells is multiset-correct for
       every mergeable family — sketch(A ⊎ B) = merge(sketch(A),
       sketch(B)) — unlike the grouped MG path, whose pre-aggregated
       counts force equal rows into one bucket.)  Stage-1 shuffle volume
-      is O(rows); use it when group cardinality is too high for the
+      is O(rows); it serves group cardinalities too high for the
       map-side dict.
-    * ``"auto"`` — one JVM-only ``approx_count_distinct`` probe on the
-      group column picks map-side iff groups <= ``_MAPSIDE_GROUP_CAP``.
 
     Stage 2 merges each group's partials in ascending ``_salt`` order —
     deterministic, so order-sensitive-within-bound families (t-digest,
@@ -319,23 +317,19 @@ def sketch_agg_grouped(
     group KEYS above 2^53 lose precision there — use string group keys
     (or drop nulls first) for snowflake-scale id groups.
     """
-    if mode not in ("auto", "mapside", "shuffle"):
-        raise ValueError(f"mode must be auto|mapside|shuffle, got {mode!r}")
     group_type = df.schema[group_col].dataType
     partial_schema = StructType(
         [StructField(group_col, group_type, True), *GROUPED_PARTIAL_SCHEMA_SUFFIX]
     )
     projected = df.select(F.col(group_col), F.col(value_col).alias("_v"))
 
-    if mode == "auto":
-        n_groups = projected.agg(
-            F.approx_count_distinct(group_col).alias("g")
-        ).first()["g"]
-        mode = "mapside" if n_groups <= _MAPSIDE_GROUP_CAP else "shuffle"
+    n_groups = projected.agg(
+        F.approx_count_distinct(group_col).alias("g")
+    ).first()["g"]
 
     _NULL = object()  # sentinel: the SQL null group
 
-    if mode == "mapside":
+    if n_groups <= _MAPSIDE_GROUP_CAP:
 
         def fold_partitions(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             ctx = TaskContext.get()

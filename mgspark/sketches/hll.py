@@ -81,9 +81,7 @@ class HLLSketch(MergeableSketch):
         return float(raw)
 
 
-def hll_distinct_grouped(
-    df, group_col: str, value_col: str, p: int = 14, mode: str = "auto",
-):
+def hll_distinct_grouped(df, group_col: str, value_col: str, p: int = 14):
     """Per-group distinct-count estimates: (group, n_distinct_est long).
 
     The ``groupBy(g).agg(approx_count_distinct)`` shape, but through the
@@ -98,7 +96,7 @@ def hll_distinct_grouped(
     from mgspark.sketches.base import sketch_agg_grouped
 
     sk = HLLSketch(p)
-    payloads = sketch_agg_grouped(df, group_col, value_col, sk, mode=mode)
+    payloads = sketch_agg_grouped(df, group_col, value_col, sk)
     schema = StructType(
         [
             StructField(group_col, df.schema[group_col].dataType, True),

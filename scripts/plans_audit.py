@@ -196,7 +196,7 @@ def main() -> None:
         "exchange moves O(partitions x groups x sketch-size) partial "
         "rows into the per-group merge — the hash-aggregate shape for "
         "sketch states.",
-        tree(sketch_agg_grouped(docs, "lang", "doc_id", HLLSketch(12), mode="mapside")),
+        tree(sketch_agg_grouped(docs, "lang", "doc_id", HLLSketch(12))),
     ))
 
     from mgspark.pipeline.decontam import decontaminate

@@ -56,6 +56,19 @@ def test_score_threshold_is_margin_rule(spark):
     assert got == {0: 1, 1: 0, 2: 1}  # margin 0 keeps (>=)
 
 
+def test_null_element_and_label_fall_back_to_distributed(spark):
+    """A null feature element or a null label would turn the local
+    driver-side loop's weights into NaN; training must take the
+    distributed path instead, which skips the nulls."""
+    rows = [(0, [1.0, 2.0], 1), (1, [-1.0, None], 0), (2, [3.0, -1.0], None),
+            (3, [-2.0, -2.0], 0), (4, [2.0, 1.0], 1)]
+    df = spark.createDataFrame(rows, "doc_id long, features array<double>, label long")
+    w, b = logreg_train(df, "features", "label", iterations=5, lr=0.3)
+    dw, db = logreg_train(df, "features", "label", iterations=5, lr=0.3, local_elements=0)
+    assert np.isfinite(w).all() and np.isfinite(b)
+    assert np.allclose(w, dw) and abs(b - db) < 1e-12
+
+
 def test_empty_corpus(spark):
     df = spark.createDataFrame([], "doc_id long, features array<double>, label long")
     w, b = logreg_train(df, "features", "label")

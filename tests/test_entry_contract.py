@@ -2,6 +2,7 @@
 sf0.01 and compares row counts, schemas, and values against oracle_sql()
 via DuckDB on the same parquet tables."""
 
+import json
 import os
 import sys
 
@@ -58,3 +59,22 @@ def test_query_vs_oracle(spark, duck, name):
         assert got[col].astype(str).tolist() == want[col].astype(str).tolist(), (
             f"{name}: column {col} mismatch"
         )
+
+
+def test_bench_extra_reports_quartiles_and_jobs(spark, sf_dir, monkeypatch, capsys):
+    """bench_extra.py times a declared query in-process and prints one
+    JSON row per query: median and quartiles of the samples, the sample
+    count and the Spark jobs the query launched."""
+    import bench_extra
+
+    monkeypatch.setattr(bench_extra, "SF_DIR", sf_dir)
+    monkeypatch.setattr(bench_extra, "CPUS", spark.sparkContext.defaultParallelism)
+    saved = {key: spark.conf.get(key) for key in bench_extra.SPLIT_CONF}
+    try:
+        bench_extra.main(["hll_distinct_user_id", "--repeats", "2"])
+    finally:  # the session is shared with the other tests
+        for key, value in saved.items():
+            spark.conf.set(key, value)
+    row = json.loads(capsys.readouterr().out.splitlines()[0])["hll_distinct_user_id"]
+    assert row["n"] == 2 and row["jobs"] >= 1
+    assert row["q1_s"] <= row["median_s"] <= row["q3_s"]

@@ -14,6 +14,11 @@ from mgspark.sketches import (
     kll_quantiles,
     tdigest_quantiles,
 )
+import mgspark.sketches.base as sketch_base
+
+# Grouped plans, forced through the observed-group-count cap: every test
+# frame has fewer groups than the default cap, and none has <= -1.
+GROUPED_PLANS = (("mapside", sketch_base._MAPSIDE_GROUP_CAP), ("shuffle", -1))
 
 
 @pytest.fixture(scope="module")
@@ -138,7 +143,7 @@ def test_sketch_agg_checkpoint_resume(spark, tables, tmp_path):
     assert np.array_equal(s1, s2)
 
 
-def test_hll_distinct_grouped_accuracy_and_nulls(spark):
+def test_hll_distinct_grouped_accuracy_and_nulls(spark, monkeypatch):
     """Per-group HLL estimates within the published error bound (~1.04/
     sqrt(2^p), p=14 -> ~0.8%); a null group forms its own group like
     SQL GROUP BY; groups never bleed into each other."""
@@ -164,18 +169,20 @@ def test_hll_distinct_grouped_accuracy_and_nulls(spark):
         for r in df.groupBy("grp").agg(F.count_distinct("v").alias("c")).collect()
     }
     results = {}
-    for mode in ("mapside", "shuffle"):
+    for mode, cap in GROUPED_PLANS:
+        monkeypatch.setattr(sketch_base, "_MAPSIDE_GROUP_CAP", cap)
         est = {
             r["grp"]: r["n_distinct_est"]
-            for r in hll_distinct_grouped(df, "grp", "v", p=14, mode=mode).collect()
+            for r in hll_distinct_grouped(df, "grp", "v", p=14).collect()
         }
         assert set(est) == set(exact) == {"a", "b", None}, mode
         for g, true in exact.items():
             assert abs(est[g] - true) / true < 0.05, (mode, g, est[g], true)
         results[mode] = est
     # HLL register merges are split-invariant: both plans must agree
-    # exactly, and so must the auto plan.
+    # exactly, and so must the plan the default cap picks.
     assert results["mapside"] == results["shuffle"]
+    monkeypatch.undo()
     auto = {
         r["grp"]: r["n_distinct_est"]
         for r in hll_distinct_grouped(df, "grp", "v", p=14).collect()
@@ -183,7 +190,7 @@ def test_hll_distinct_grouped_accuracy_and_nulls(spark):
     assert auto == results["mapside"]
 
 
-def test_tdigest_grouped_deterministic_and_bounded(spark):
+def test_tdigest_grouped_deterministic_and_bounded(spark, monkeypatch):
     """Grouped t-digest (order-sensitive family): two runs over the same
     input must produce BIT-IDENTICAL estimates in both plans (stage-2
     merges sort by salt), and each estimated median's exact rank must
@@ -197,12 +204,13 @@ def test_tdigest_grouped_deterministic_and_bounded(spark):
         (F.xxhash64("id") % 100000).cast("double").alias("v"),
     )
     runs = []
-    for mode in ("mapside", "shuffle"):
+    for mode, cap in GROUPED_PLANS:
+        monkeypatch.setattr(sketch_base, "_MAPSIDE_GROUP_CAP", cap)
         pair = []
         for _ in range(2):
             est = {
                 (r["grp"], r["q"]): r["quantile_est"]
-                for r in tdigest_quantiles_grouped(df, "grp", "v", [0.25, 0.5, 0.75], mode=mode).collect()
+                for r in tdigest_quantiles_grouped(df, "grp", "v", [0.25, 0.5, 0.75]).collect()
             }
             pair.append(est)
         assert pair[0] == pair[1], f"{mode}: nondeterministic grouped digest"
@@ -214,7 +222,7 @@ def test_tdigest_grouped_deterministic_and_bounded(spark):
         assert abs(below / n - q) < 0.05, (grp, q, v, below / n)
 
 
-def test_hll_grouped_numeric_group_with_nulls(spark):
+def test_hll_grouped_numeric_group_with_nulls(spark, monkeypatch):
     """Numeric group columns with nulls survive both grouped plans
     (pandas NaN keys must round-trip to SQL null longs)."""
     from pyspark.sql import functions as F
@@ -225,10 +233,11 @@ def test_hll_grouped_numeric_group_with_nulls(spark):
         F.when(F.col("id") % 3 == 2, None).otherwise(F.col("id") % 3).alias("g"),
         (F.col("id") % 1000).alias("v"),
     )
-    for mode in ("mapside", "shuffle"):
+    for mode, cap in GROUPED_PLANS:
+        monkeypatch.setattr(sketch_base, "_MAPSIDE_GROUP_CAP", cap)
         est = {
             r["g"]: r["n_distinct_est"]
-            for r in hll_distinct_grouped(df, "g", "v", mode=mode).collect()
+            for r in hll_distinct_grouped(df, "g", "v").collect()
         }
         assert set(est) == {None, 0, 1}, mode
         assert all(abs(v - 1000) / 1000 < 0.05 for v in est.values()), (mode, est)
